@@ -68,10 +68,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
-def _in_set(tok: Column, words: tuple[str, ...]) -> Column:
-    return tok.isin(*words)
-
-
 def stopword_count(col: str | Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Number of token OCCURRENCES in the stopword set (not distinct)."""
     arr = tokens(col)

@@ -472,13 +472,6 @@ def _inv_subtract_green(img: np.ndarray) -> np.ndarray:
     return _pack(a, (r + g) & 0xFF, g, (b + g) & 0xFF)
 
 
-def _ct_delta(t: int, c: int) -> int:
-    """ColorTransformDelta: signed-byte product >> 5, C truncation."""
-    ts = t - 256 if t > 127 else t
-    cs = c - 256 if c > 127 else c
-    return (ts * cs) >> 5
-
-
 def _inv_color_transform(
     img: np.ndarray, sub: np.ndarray, size_bits: int
 ) -> np.ndarray:

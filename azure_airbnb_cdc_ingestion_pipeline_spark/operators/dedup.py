@@ -426,7 +426,9 @@ def cluster_pairs(
 
     gate = _DRIVER_CC_LIMIT if driver_limit is None else driver_limit
     n_sym = sym.count()  # cheap: sym is checkpointed
-    if n_sym <= gate and isinstance(sym.schema["u"].dataType, IntegralType):
+    if 0 < gate and n_sym <= gate and isinstance(
+        sym.schema["u"].dataType, IntegralType
+    ):
         return _cluster_pairs_driver(sym, n_sym)
     nodes = sym.select("u").distinct()
     edges = (
@@ -578,13 +580,13 @@ def simhash_pairs(
     sh = track_persist(
         simhash(df, id_col, text_col, num_bits=num_bits, hasher=hasher)
     )
-    if scheme is None and (sh.count() <= 30_000 or max_distance > 3):
-        scheme = (max_distance + 1, 1)
-    elif scheme is None:
-        scheme = (6, 3)
+    n = None
+    if scheme is None:
+        n = sh.count()
+        scheme = (max_distance + 1, 1) if n <= 30_000 or max_distance > 3 else (6, 3)
     return hamming_pairs(
         sh, "id", "simhash", max_distance=max_distance, num_bits=num_bits,
-        scheme=scheme,
+        scheme=scheme, n_rows=n,
     )
 
 
@@ -595,6 +597,7 @@ def hamming_pairs(
     max_distance: int,
     num_bits: int = 64,
     scheme: tuple[int, int] | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """All pairs of fingerprints within Hamming distance ≤ max_distance,
     guaranteed complete by pigeonhole combination blocking — the
@@ -612,10 +615,12 @@ def hamming_pairs(
     collisions birthday-safe into the tens of millions of rows (d=3:
     32-bit keys; d=6: 21-bit keys ⇒ ~n²·84/2²¹ spurious candidates —
     ~2·10⁸ at 2 M rows, each a 24-byte row killed by the pre-shuffle
-    Hamming filter)."""
+    Hamming filter). ``n_rows`` is ``fps``' row count when the caller
+    already has it; otherwise it is counted here."""
     import itertools
 
-    n = fps.count()  # cheap: callers persist fps; also gates the layout
+    # cheap: callers persist fps; also gates the layout
+    n = fps.count() if n_rows is None else n_rows
     if scheme is not None:
         c, g = scheme
     else:

@@ -91,7 +91,7 @@ def process_booking_batch(
 
     ``app_id``+``batch_id`` (set by the streaming entry) arm the
     per-table idempotent batch guard: each sink commit atomically records
-    (app_id, batch_id) in its pointer (ParquetTable txn markers), and a
+    (app_id, batch_id) in its log entry (ParquetTable txn markers), and a
     REPLAYED batch — foreachBatch died after some sinks committed but
     before the checkpoint commit — skips every sink that already recorded
     this batch. Without the guard the keyed MERGE is naturally idempotent
@@ -211,7 +211,7 @@ def _process_transformed(
     )
     if maintain_incrementally:
         # before-image: current fact rows for the batch's keys, snapshotted
-        # against the pre-merge table version (version dirs are immutable,
+        # against the pre-merge table version (data dirs are immutable,
         # and _vacuum(keep=2) retains it across the one merge commit that
         # lands before this plan materializes in gold.overwrite below).
         # On a REPLAY whose fact merge already committed, "current" would

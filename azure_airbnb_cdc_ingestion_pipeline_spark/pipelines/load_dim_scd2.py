@@ -56,7 +56,8 @@ def process_scd2_batch(
     - ``initial_history`` seeds the dim on the very first batch when
       the table does not exist yet.
     - ``app_id``/``batch_id`` arm the idempotent replay guard (txn
-      markers in the table pointer, same protocol as the fact merge).
+      markers in the table's commit-log entry, same protocol as the fact
+      merge).
     """
     if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
         # wiring error, not a data error: fail before ANY batch runs

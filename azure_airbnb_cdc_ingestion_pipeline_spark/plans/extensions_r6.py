@@ -741,6 +741,7 @@ def q_stream_scd2_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are pinned by tests/test_pipelines.py."""
     import hashlib
     import os
+    import shutil
     import tempfile
 
     from pyspark.sql.types import (
@@ -778,6 +779,10 @@ def q_stream_scd2_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(in_dir, "wave*"))
     )
     table = ParquetTable(spark, table_root)
+    if not table.exists():
+        # a checkpoint without a committed table (e.g. a table left in a
+        # layout this code does not read) would skip every wave
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     from ..pipelines.load_dim_scd2 import load_dim_scd2_stream
 

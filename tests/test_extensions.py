@@ -1329,3 +1329,18 @@ def test_cluster_pairs_string_ids_take_distributed_path(spark):
     assert got == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
     }
+
+
+def test_cluster_pairs_empty_forced_distributed(spark, monkeypatch):
+    # driver_limit=0 forces the distributed loop even when the pair set is
+    # empty (n_sym = 0 is not above a gate of 0)
+    from azure_airbnb_cdc_ingestion_pipeline_spark.operators import dedup as D
+
+    def no_driver(*_a, **_k):
+        raise AssertionError("driver kernel ran under driver_limit=0")
+
+    monkeypatch.setattr(D, "_cluster_pairs_driver", no_driver)
+    pairs = spark.createDataFrame([], "a_id bigint, b_id bigint")
+    out = D.cluster_pairs(pairs, driver_limit=0)
+    assert out.columns == ["doc_id", "canonical_id"]
+    assert out.collect() == []

@@ -80,9 +80,7 @@ def test_mor_fold_clears_deltas_and_bounds_files(spark, table):  # noqa: F811
             _mk(spark, [(i % 7, i, f"v{i}", i % 3)]),
             keys=["k"], partition_by=["p"], order_by=["ts"], fold_after=8,
         )
-    vdir = table._version_dir(table.current_version())
-    meta = table._read_meta(vdir)
-    assert meta["mor"]["pending"] < 8
+    assert table._entry(table.current_version())["mor"]["pending"] < 8
     # pending delta files + base partition files stay bounded: never
     # grows with trigger count
     assert table.live_file_count() < 8 + 3 * 4
@@ -91,9 +89,7 @@ def test_mor_fold_clears_deltas_and_bounds_files(spark, table):  # noqa: F811
     )
     # drive to the next fold boundary: the fold version must carry no
     # linked _delta files and reset pending to 0
-    while table._read_meta(
-        table._version_dir(table.current_version())
-    )["mor"]["pending"] != 0:
+    while table._entry(table.current_version())["mor"]["pending"] != 0:
         table.upsert_delta(
             _mk(spark, [(99, 99, "x", 0)]),
             keys=["k"], partition_by=["p"], order_by=["ts"], fold_after=8,
@@ -136,7 +132,8 @@ def test_mor_direct_upsert_pruned_on_pending_folds(spark, table):  # noqa: F811
     vdir = table._version_dir(table.current_version())
     assert not glob.glob(os.path.join(vdir, "_delta", "*"))
     # read() of the folded version needs no resolution pass
-    assert not (table._read_meta(vdir).get("mor") or {}).get("pending")
+    entry = table._entry(table.current_version())
+    assert not (entry.get("mor") or {}).get("pending")
 
 
 def test_mor_spec_mismatch_raises(spark, table):  # noqa: F811

@@ -154,29 +154,35 @@ def test_upsert_pruned_escaped_partition_values(spark, tmp_path):
 def test_concurrent_writer_fails_loudly(spark, tmp_path):
     """Optimistic-concurrency commit: a writer whose snapshot went stale
     (another commit landed mid-write) raises instead of silently dropping
-    the winner's rows."""
+    the winner's rows, and removes its own data dir."""
     import pytest
 
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import (
         ConcurrentWriteError,
     )
 
-    t = ParquetTable(spark, str(tmp_path / "race"))
+    root = str(tmp_path / "race")
+    t = ParquetTable(spark, root)
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    t2 = ParquetTable(spark, root)
+    publish = t._publish
+    seen = {}
 
-    base, ver = t._claim_version()
-    # interleaved second writer commits first
-    t2 = ParquetTable(spark, str(tmp_path / "race"))
-    t2.upsert(spark.createDataFrame([(2, "b")], "k int, v string"), keys=["k"])
-    assert t2.read().count() == 2
+    def interleaved(w, *args):
+        # A has snapshotted v1 and written its data dir; B commits in full
+        seen["data"] = w.data
+        assert os.path.isdir(w.data)
+        t2.upsert(spark.createDataFrame([(2, "b")], "k int, v string"), ["k"])
+        return publish(w, *args)
 
-    spark.createDataFrame([(3, "c")], "k int, v string").write.mode(
-        "overwrite"
-    ).parquet(t._version_dir(ver))
+    t._publish = interleaved
     with pytest.raises(ConcurrentWriteError):
-        t._commit(ver, expected_base=base)
-    # the winner's committed version is intact
-    assert t.read().count() == 2
+        t.upsert(spark.createDataFrame([(3, "c")], "k int, v string"), ["k"])
+    # the winner's committed version is intact and current
+    fresh = ParquetTable(spark, root)
+    assert fresh.current_version() == 2
+    assert sorted(r.k for r in fresh.read().collect()) == [1, 2]
+    assert not os.path.exists(seen["data"])
 
 
 def test_upsert_routes_to_pruned_for_partitioned_tables(spark, tmp_path):
