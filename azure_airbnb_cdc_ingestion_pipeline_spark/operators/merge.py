@@ -21,9 +21,12 @@ target. One shuffle for the dedupe, one left-anti join (broadcast when the
 source micro-batch is small — the common CDC case — making the big
 target-side pass shuffle-free).
 
-Scale: with a real lakehouse table format this becomes ``MERGE INTO`` with
-file pruning on the key; here the rewrite cost is full-table, which is the
-known trade of copy-on-write without file-level indexes. The operator
+Scale: these operators compute the post-merge rows; the storage layer
+decides what that costs. ``sources.tables.ParquetTable`` appends a CDC
+micro-batch as a merge-on-read delta (O(batch) per trigger) and folds the
+pending deltas every few batches with a copy-on-write merge that rewrites
+only the partitions the batch touches and hardlinks the rest. A lakehouse
+``MERGE INTO`` with file pruning on the key is the same trade; the operator
 surface is identical, so swapping the storage layer does not touch callers.
 """
 
@@ -82,7 +85,6 @@ def merge_dataframes(
     source: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column] | None = None,
-    broadcast_source_keys: bool = True,
     event_time_wins: bool = False,
 ) -> DataFrame:
     """WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT ALL (no delete).
@@ -112,9 +114,7 @@ def merge_dataframes(
             raise ValueError("event_time_wins requires order_by")
         return resolve_event_time(target, source, keys, order_by)
     src = latest_per_key(source, keys, order_by).select(*target.columns)
-    src_keys = src.select(*keys).dropDuplicates(keys)
-    if broadcast_source_keys:
-        src_keys = F.broadcast(src_keys)
+    src_keys = F.broadcast(src.select(*keys).dropDuplicates(keys))
     untouched = target.join(src_keys, on=keys, how="left_anti")
     return src.unionByName(untouched)
 
@@ -161,7 +161,6 @@ def scd2_apply(
     eff_from: str = "effective_from",
     eff_to: str = "effective_to",
     current_col: str = "is_current",
-    broadcast_change_keys: bool = True,
 ) -> DataFrame:
     """SCD Type 2: apply a change batch to a versioned dimension,
     KEEPING history — the engine extension of the reference's Type-1
@@ -186,9 +185,7 @@ def scd2_apply(
     keys = list(keys)
     attr_cols = list(attr_cols)
     out_cols = keys + attr_cols + [eff_from, eff_to, current_col]
-    chg_keys = changes.select(*keys).dropDuplicates(keys)
-    if broadcast_change_keys:
-        chg_keys = F.broadcast(chg_keys)
+    chg_keys = F.broadcast(changes.select(*keys).dropDuplicates(keys))
     untouched = history.join(chg_keys, on=keys, how="left_anti").select(*out_cols)
     affected = history.join(chg_keys, on=keys, how="left_semi")
     seq = affected.select(*keys, *attr_cols, eff_from).unionByName(

@@ -23,7 +23,8 @@ from ..operators.derive import derive_booking_columns
 from ..operators.split import conditional_split
 from ..schemas import BOOKING_DOC_SCHEMA
 from ..sources.tables import ParquetTable
-from ..streaming.cdc import read_change_feed, run_foreach_batch_merge
+from ..streaming.cdc import read_change_feed
+from .sink import already_applied, append_once, check_dq_wiring, dq_gate, drain
 
 def _quality_pred():
     # The reference compares the STRING dates lexicographically
@@ -43,8 +44,8 @@ def transform_bookings(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 # Fact partitioning for the pruned merge: a booking's calendar month is
-# immutable across updates (the upsert_pruned precondition), and CDC
-# updates cluster in recent months — steady-state batches rewrite only
+# immutable across updates (the pruned-merge precondition), and CDC
+# updates cluster in recent months — steady-state folds rewrite only
 # the hot partitions.
 FACT_PARTITIONING = ["booking_year", "booking_month"]
 
@@ -69,12 +70,9 @@ def process_booking_batch(
     quarantine: ParquetTable,
     dim: DataFrame | None = None,
     gold: ParquetTable | None = None,
-    partitioned: bool = True,
     incremental_gold: bool = False,
     event_time_wins: bool = False,
-    app_id: str | None = None,
-    batch_id: int | None = None,
-    merge_on_read: bool = False,
+    txn: tuple[str, int] | None = None,
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
@@ -82,99 +80,53 @@ def process_booking_batch(
     """One micro-batch: quarantine bad rows, MERGE good rows into the fact
     (latest-per-booking_id wins), then refresh gold if a dim is wired.
 
-    ``merge_on_read=True`` (the streaming entry's default): the fact
-    merge defers to `ParquetTable.upsert_delta` — O(batch) delta append
-    per trigger with periodic folds — instead of the copy-on-write
-    pruned merge whose rewrite floor dominates small micro-batches (the
-    r4 steady-state throughput miss). Readers always see resolved
-    content either way.
+    The fact merge is `ParquetTable.upsert_delta`: an O(batch) delta
+    append per trigger, folded into the partitions it touches every 16th
+    batch. A copy-on-write merge per batch would pay its rewrite floor on
+    every small micro-batch. Readers always see resolved content.
 
-    ``app_id``+``batch_id`` (set by the streaming entry) arm the
-    per-table idempotent batch guard: each sink commit atomically records
-    (app_id, batch_id) in its log entry (ParquetTable txn markers), and a
-    REPLAYED batch — foreachBatch died after some sinks committed but
-    before the checkpoint commit — skips every sink that already recorded
-    this batch. Without the guard the keyed MERGE is naturally idempotent
-    but the quarantine APPEND is not (a replay would duplicate rejected
-    rows), and the incremental-gold delta would be computed from an
-    already-merged before-image.
+    ``txn=(app_id, batch_id)`` (set by the streaming entry) arms the
+    per-table idempotent batch guard of :mod:`.sink`: a REPLAYED batch —
+    foreachBatch died after some sinks committed but before the
+    checkpoint commit — skips every sink that already recorded it. The
+    keyed MERGE is idempotent anyway, but the quarantine APPEND is not (a
+    replay would duplicate rejected rows), and the incremental-gold delta
+    would be computed from an already-merged before-image.
 
     `event_time_wins=True` switches the merge's matched-row conflict rule
     from arrival order (the reference's alter-row behavior) to max event
     `timestamp`: out-of-order micro-batches then converge to the same
     fact state regardless of delivery order.
 
-    `partitioned=True` uses the partition-pruned merge (only the months
-    present in the batch are rewritten; the rest of the fact table is
-    hardlinked forward — the 100 TB steady state).
-
     `incremental_gold=True` maintains gold with retraction deltas
     (operators.aggregate.merge_gold/signed_delta): O(batch + |groups|)
-    per trigger instead of re-aggregating the whole fact — the matching
-    steady state for the pruned merge. Falls back to a full refresh on
-    the first batch (no standing gold yet)."""
+    per trigger instead of re-aggregating the whole fact. Falls back to a
+    full refresh on the first batch (no standing gold yet)."""
+    check_dq_wiring(dq_rules, dq_on_breach, dq_quarantine)
     # Materialize the micro-batch once: every consumer below (quarantine
     # emptiness probe + append, merge, partition-combo collect, gold
     # before-image) otherwise re-parses the landing JSON — at 4 consumers
     # that's 4x the scan cost per trigger. A micro-batch fits in memory
     # by construction (it's trigger-bounded).
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        # Wiring error, not a data error: fail before ANY batch runs
-        # rather than killing the stream mid-run at the first breach.
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
     batch = batch.persist()
     dq_cached: DataFrame | None = None
     try:
         derived, rejected = transform_bookings(batch)
         if dq_rules is not None:
-            # Expectation gate BEFORE any sink commit (VERDICT r5 #7):
-            # halt mode raises here — neither quarantine append, fact
-            # merge, nor gold refresh runs, and the checkpoint never
-            # commits the batch, so a fixed-and-restarted stream replays
-            # it cleanly. Quarantine mode diverts breaching rows to a
-            # DEDICATED table (derived schema ≠ the raw rejected-rows
-            # schema) and publishes the clean remainder.
-            from ..operators.dq import expectation_gate
-
+            # the gate sees the derived rows, so its quarantine is a
+            # DEDICATED table (derived schema ≠ the raw rejected-rows one)
             dq_cached = derived.persist()
-            derived, breached = expectation_gate(
-                dq_cached, dq_rules, on_breach=dq_on_breach
+            derived = dq_gate(
+                dq_cached, dq_rules, dq_on_breach, dq_quarantine, txn
             )
-            if breached is not None:
-                if dq_quarantine is None:
-                    raise ValueError(
-                        "dq_on_breach='quarantine' requires a dq_quarantine "
-                        "table — breaching rows must not be dropped silently"
-                    )
-                if not _already_applied(dq_quarantine, app_id, batch_id):
-                    txn = (
-                        (app_id, batch_id)
-                        if app_id is not None and batch_id is not None
-                        else None
-                    )
-                    dq_quarantine.append(breached, txn=txn)
-                    dq_quarantine.maybe_compact(trigger_files=64)
         _process_transformed(
             derived, rejected, fact, quarantine, dim, gold,
-            partitioned, incremental_gold, event_time_wins,
-            app_id=app_id, batch_id=batch_id, merge_on_read=merge_on_read,
+            incremental_gold, event_time_wins, txn,
         )
     finally:
         if dq_cached is not None:
             dq_cached.unpersist()
         batch.unpersist()
-
-
-def _already_applied(table: ParquetTable, app_id, batch_id) -> bool:
-    """True when ``table`` has already committed this (app, batch) — the
-    replay-detection half of the idempotent batch guard."""
-    if app_id is None or batch_id is None or not table.exists():
-        return False
-    last = table.last_txn(app_id)
-    return last is not None and last >= batch_id
 
 
 def _process_transformed(
@@ -184,28 +136,15 @@ def _process_transformed(
     quarantine: ParquetTable,
     dim: DataFrame | None,
     gold: ParquetTable | None,
-    partitioned: bool,
     incremental_gold: bool,
-    event_time_wins: bool = False,
-    app_id: str | None = None,
-    batch_id: int | None = None,
-    merge_on_read: bool = False,
+    event_time_wins: bool,
+    txn: tuple[str, int] | None,
 ) -> None:
     from ..operators.merge import latest_per_key
 
-    txn = (app_id, batch_id) if app_id is not None and batch_id is not None \
-        else None
     if not rejected.isEmpty():
-        if not _already_applied(quarantine, app_id, batch_id):
-            # O(batch) append, NOT idempotent on its own — the txn marker
-            # (committed atomically with the append) is what makes a
-            # replayed batch skip it instead of duplicating rejected rows
-            quarantine.append(rejected, txn=txn)
-            # append-per-batch accumulates one file per trigger forever;
-            # the size-triggered compaction keeps the live file count
-            # saw-toothing below the trigger instead (steady-state bound)
-            quarantine.maybe_compact(trigger_files=64)
-    fact_replayed = _already_applied(fact, app_id, batch_id)
+        append_once(quarantine, rejected, txn)
+    fact_replayed = already_applied(fact, txn)
     maintain_incrementally = (
         incremental_gold and dim is not None and gold is not None and gold.exists()
     )
@@ -222,7 +161,7 @@ def _process_transformed(
             from ..sources.tables import read_version
 
             fact_now = fact.read()
-            base_v = fact.last_txn_base(app_id)
+            base_v = fact.last_txn_base(txn[0])
             if base_v:
                 fact_now = read_version(fact, base_v)
             before = fact_now.join(
@@ -245,7 +184,7 @@ def _process_transformed(
             # event and permanently diverge gold from the fact. Uses the
             # SAME deterministic source-wins tie-break as the merge
             # itself (resolve_event_time), so an exact event-time tie
-            # resolves identically here and in fact.upsert below.
+            # resolves identically here and in fact.upsert_delta below.
             from ..operators.merge import resolve_event_time
 
             after = resolve_event_time(
@@ -262,31 +201,16 @@ def _process_transformed(
         # with retraction-to-empty) are dropped
         new_gold = new_gold.filter(F.col("total_bookings") > 0)
     if not fact_replayed:
-        if partitioned and merge_on_read:
-            fact.upsert_delta(
-                derived,
-                keys=FACT_KEYS,
-                partition_by=FACT_PARTITIONING,
-                order_by=FACT_ORDER,
-                event_time_wins=event_time_wins,
-                txn=txn,
-            )
-        elif partitioned:
-            fact.upsert_pruned(
-                derived,
-                keys=FACT_KEYS,
-                partition_by=FACT_PARTITIONING,
-                order_by=FACT_ORDER,
-                event_time_wins=event_time_wins,
-                txn=txn,
-            )
-        else:
-            fact.upsert(
-                derived, keys=FACT_KEYS, order_by=FACT_ORDER,
-                event_time_wins=event_time_wins, txn=txn,
-            )
+        fact.upsert_delta(
+            derived,
+            keys=FACT_KEYS,
+            partition_by=FACT_PARTITIONING,
+            order_by=FACT_ORDER,
+            event_time_wins=event_time_wins,
+            txn=txn,
+        )
     if dim is not None and gold is not None:
-        if not _already_applied(gold, app_id, batch_id):
+        if not already_applied(gold, txn):
             if maintain_incrementally:
                 gold.overwrite(new_gold, txn=txn)
             else:
@@ -304,10 +228,8 @@ def load_booking_fact_stream(
     dim: DataFrame | None = None,
     gold: ParquetTable | None = None,
     available_now: bool = True,
-    partitioned: bool = True,
     max_files_per_trigger: int | None = None,
     event_time_wins: bool = False,
-    merge_on_read: bool = True,
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
@@ -315,13 +237,18 @@ def load_booking_fact_stream(
     processing_time: str = "10 seconds",
 ):
     """Streaming entry: drain the change-feed landing dir through the merge
-    (exactly-once via checkpoint + idempotent merge).
+    (exactly-once via checkpoint + idempotent merge). Each trigger appends
+    a sequence-numbered fact delta (O(batch)) and every 16th folds the
+    deltas into the base — the low-latency path that sustains 1 k-event
+    micro-batches above the 1,000 events/s target.
 
-    ``available_now=False`` runs a CONTINUOUS ``processingTime`` trigger
-    (r8 — the steady-latency consumer shape; ``processing_time`` sets the
-    cadence) and returns the running query without awaiting it.
-    ``incremental_gold=True`` maintains gold with retraction deltas every
-    batch instead of full re-aggregation (see
+    ``available_now=True`` drains what has landed and returns (the
+    reference's hourly drain; also the one-shot backfill of a whole
+    landing dir). ``available_now=False`` runs a CONTINUOUS
+    ``processingTime`` trigger — the steady-latency consumer shape;
+    ``processing_time`` sets the cadence — and returns the running query
+    without awaiting it. ``incremental_gold=True`` maintains gold with
+    retraction deltas every batch instead of full re-aggregation (see
     :func:`process_booking_batch`).
 
     ``dq_rules`` (e.g. :func:`booking_expectations`) arms the per-batch
@@ -330,57 +257,25 @@ def load_booking_fact_stream(
     (``dq_on_breach='halt'`` — the reference's stopOnFirstError) or
     diverts breaching rows to ``dq_quarantine`` and publishes the rest.
 
-    ``merge_on_read=True`` (default): steady-state triggers append
-    sequence-numbered deltas (O(batch) per trigger) and fold into the
-    base every 16th batch — the low-latency path that sustains 1 k-event
-    micro-batches above the 1,000 events/s target. Set False to force
-    the copy-on-write pruned merge every batch (every version dir is
-    then a plain partitioned parquet dataset with no resolve-on-read).
-
     ``event_time_wins=True``: matched keys resolve to the max event
     ``timestamp`` instead of arrival order, so a replayed or out-of-order
     landing drain converges to the same fact state (the `WHEN MATCHED AND
     s.ts >= t.ts` conditional-MERGE guard)."""
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
+    check_dq_wiring(dq_rules, dq_on_breach, dq_quarantine)
     stream = read_change_feed(
         spark, landing_dir, BOOKING_DOC_SCHEMA,
         max_files_per_trigger=max_files_per_trigger,
     )
 
-    # stable per (pipeline, checkpoint): the batch-id sequence is scoped to
-    # the checkpoint, so the idempotency marker must be too
-    app_id = f"booking_fact:{checkpoint_dir}"
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         process_booking_batch(
             batch_df, fact, quarantine, dim=dim, gold=gold,
-            partitioned=partitioned, event_time_wins=event_time_wins,
-            app_id=app_id, batch_id=batch_id, merge_on_read=merge_on_read,
-            dq_rules=dq_rules, dq_on_breach=dq_on_breach,
-            dq_quarantine=dq_quarantine, incremental_gold=incremental_gold,
+            incremental_gold=incremental_gold,
+            event_time_wins=event_time_wins, txn=txn, dq_rules=dq_rules,
+            dq_on_breach=dq_on_breach, dq_quarantine=dq_quarantine,
         )
 
-    q = run_foreach_batch_merge(
-        stream, _process, checkpoint_dir, available_now=available_now,
-        processing_time=processing_time,
+    return drain(
+        stream, _process, f"booking_fact:{checkpoint_dir}", checkpoint_dir,
+        available_now=available_now, processing_time=processing_time,
     )
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def load_booking_fact_batch(
-    spark: SparkSession,
-    landing_dir: str,
-    fact: ParquetTable,
-    quarantine: ParquetTable,
-    dim: DataFrame | None = None,
-    gold: ParquetTable | None = None,
-) -> None:
-    """Batch variant (one-shot backfill of the whole landing dir)."""
-    raw = spark.read.schema(BOOKING_DOC_SCHEMA).json(landing_dir)
-    process_booking_batch(raw, fact, quarantine, dim=dim, gold=gold)

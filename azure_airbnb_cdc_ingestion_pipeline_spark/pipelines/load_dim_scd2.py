@@ -6,19 +6,16 @@ Engine extension of the reference's Type-1 dim pipeline
 in place and forgets): change waves arrive as micro-batches, each batch
 is gated by the declarative expectation suite (`operators.dq`) BEFORE
 `operators.merge.scd2_apply` rebuilds the affected keys' version
-chains, and the versioned dim commits with the same (app_id, batch_id)
-idempotency markers the fact path uses — a replayed batch (foreachBatch
-died after the dim committed but before the checkpoint did) skips the
-apply instead of double-applying.
+chains, and the versioned dim commits through the sink protocol the
+fact path uses (:mod:`.sink`) — a replayed batch (foreachBatch died
+after the dim committed but before the checkpoint did) skips the apply
+instead of double-applying.
 
-The r6 `stream_scd2_coverage` catalog key drove scd2_apply from an
-inline foreachBatch with NO gate — a contract gap vs the fact merge
-(VERDICT r6 #8): a poisoned change wave would have versioned garbage
-into the dimension that the fact path would have halted on. This module
-closes it; the gate semantics (halt = stop BEFORE any commit so a
-fixed-and-restarted stream replays the batch cleanly; quarantine =
-divert breaching rows, version the clean remainder) are identical to
-`pipelines.load_booking_fact.process_booking_batch`.
+No change wave reaches the dimension ungated: a poisoned wave that would
+halt the fact merge must not version garbage into the dim either. The
+gate semantics (halt = stop BEFORE any commit so a fixed-and-restarted
+stream replays the batch cleanly; quarantine = divert breaching rows,
+version the clean remainder) are the fact path's.
 """
 
 from __future__ import annotations
@@ -29,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.merge import scd2_apply
 from ..sources.tables import ParquetTable
+from .sink import already_applied, check_dq_wiring, dq_gate, drain
 
 
 def process_scd2_batch(
@@ -41,8 +39,7 @@ def process_scd2_batch(
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
-    app_id: str | None = None,
-    batch_id: int | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> None:
     """One change micro-batch: gate, then SCD2-apply into the versioned
     dim.
@@ -55,49 +52,22 @@ def process_scd2_batch(
       ``dq_quarantine`` and versions only the clean remainder.
     - ``initial_history`` seeds the dim on the very first batch when
       the table does not exist yet.
-    - ``app_id``/``batch_id`` arm the idempotent replay guard (txn
+    - ``txn=(app_id, batch_id)`` arms the idempotent replay guard (txn
       markers in the table's commit-log entry, same protocol as the fact
       merge).
     """
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        # wiring error, not a data error: fail before ANY batch runs
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
+    check_dq_wiring(dq_rules, dq_on_breach, dq_quarantine)
     if batch.isEmpty():
         return
-    if dq_rules is not None:
-        from ..operators.dq import expectation_gate
-
-        batch = batch.persist()
-        try:
-            clean, breached = expectation_gate(
-                batch, dq_rules, on_breach=dq_on_breach
-            )
-            if breached is not None:
-                if not _already_applied(dq_quarantine, app_id, batch_id):
-                    txn = (
-                        (app_id, batch_id)
-                        if app_id is not None and batch_id is not None
-                        else None
-                    )
-                    dq_quarantine.append(breached, txn=txn)
-                    dq_quarantine.maybe_compact(trigger_files=64)
-            _apply(clean, dim, keys, attr_cols, initial_history, eff_from,
-                   app_id, batch_id)
-        finally:
-            batch.unpersist()
-    else:
-        _apply(batch, dim, keys, attr_cols, initial_history, eff_from,
-               app_id, batch_id)
-
-
-def _already_applied(table: ParquetTable, app_id, batch_id) -> bool:
-    if app_id is None or batch_id is None or not table.exists():
-        return False
-    last = table.last_txn(app_id)
-    return last is not None and last >= batch_id
+    if dq_rules is None:
+        _apply(batch, dim, keys, attr_cols, initial_history, eff_from, txn)
+        return
+    batch = batch.persist()
+    try:
+        clean = dq_gate(batch, dq_rules, dq_on_breach, dq_quarantine, txn)
+        _apply(clean, dim, keys, attr_cols, initial_history, eff_from, txn)
+    finally:
+        batch.unpersist()
 
 
 def _apply(
@@ -107,10 +77,9 @@ def _apply(
     attr_cols: Sequence[str],
     initial_history: DataFrame | None,
     eff_from: str,
-    app_id: str | None,
-    batch_id: int | None,
+    txn: tuple[str, int] | None,
 ) -> None:
-    if _already_applied(dim, app_id, batch_id):
+    if already_applied(dim, txn):
         return
     if dim.exists():
         base = dim.read()
@@ -121,8 +90,6 @@ def _apply(
             "SCD2 dim does not exist and no initial_history was given — "
             "an empty dimension must be seeded explicitly, not implied"
         )
-    txn = (app_id, batch_id) if app_id is not None and batch_id is not None \
-        else None
     dim.overwrite(
         scd2_apply(base, changes, keys=keys, attr_cols=attr_cols,
                    eff_from=eff_from),
@@ -145,26 +112,17 @@ def load_dim_scd2_stream(
 ):
     """Streaming entry: drain a change stream through the gated SCD2
     apply (exactly-once via checkpoint + txn-marker replay guard)."""
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
-    from ..streaming.cdc import run_foreach_batch_merge
+    check_dq_wiring(dq_rules, dq_on_breach, dq_quarantine)
 
-    app_id = f"dim_scd2:{checkpoint_dir}"
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         process_scd2_batch(
             batch_df, dim, keys, attr_cols,
             initial_history=initial_history, eff_from=eff_from,
             dq_rules=dq_rules, dq_on_breach=dq_on_breach,
-            dq_quarantine=dq_quarantine, app_id=app_id, batch_id=batch_id,
+            dq_quarantine=dq_quarantine, txn=txn,
         )
 
-    q = run_foreach_batch_merge(
-        stream, _process, checkpoint_dir, available_now=available_now
+    return drain(
+        stream, _process, f"dim_scd2:{checkpoint_dir}", checkpoint_dir,
+        available_now=available_now,
     )
-    if available_now:
-        q.awaitTermination()
-    return q

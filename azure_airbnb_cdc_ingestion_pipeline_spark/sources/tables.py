@@ -89,6 +89,14 @@ def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
     return argmax_per_group(allf, keys, order, payload)
 
 
+def _same_rule(mor: dict, keys, event_time_wins: bool) -> bool:
+    """Whether a merge on ``keys`` under ``event_time_wins`` resolves rows
+    the way the merge-on-read spec ``mor`` does."""
+    return mor["keys"] == list(keys) and (
+        bool(mor.get("event_time_wins")) == bool(event_time_wins)
+    )
+
+
 @dataclasses.dataclass
 class _Write:
     """One commit in progress (see :meth:`ParquetTable._new_version`)."""
@@ -413,41 +421,25 @@ class ParquetTable:
         and the SCD-Type-1 dim upsert keyed on customer_id
         (/root/reference/pipeline/LoadCustomerDim.json:82-101).
 
-        When ``partition_by`` is given (or the existing table was written
-        partitioned), the merge routes to :meth:`upsert_pruned` — O(affected
-        partitions) per batch. The unpartitioned fallback rewrites the whole
-        table per merge (O(table) per batch, quadratic over a stream's
-        lifetime) and logs a scale warning when the table is partitionable.
-        """
-        from ..operators.merge import merge_dataframes, latest_per_key
+        The source resolves to its latest row per key on every write, the
+        first one included.
 
-        parts = partition_by or self._partition_columns()
-        if parts:
-            self.upsert_pruned(
-                source, keys, parts, order_by=order_by,
-                event_time_wins=event_time_wins, txn=txn,
-            )
-            return
+        ``partition_by`` (default: the table's current spec) makes the merge
+        copy-on-write per partition: only the partitions the source touches
+        are rewritten, the rest are hardlinked forward — O(affected
+        partitions) per batch, the contract of a Delta MERGE with a
+        partition-pruning ON clause. Its precondition is the same as
+        Delta's: partition attributes are immutable per key (a key whose
+        partition value changed would leave its old row in the untouched
+        partition). An unpartitioned table is rewritten whole per merge.
+        """
+        mor = self._snapshot()[1].get("mor") or {}
+        if mor.get("pending") and not _same_rule(mor, keys, event_time_wins):
+            # the deltas must resolve under the rule they were written with
+            self._fold_pending()
         with self._new_version("upsert", txn) as w:
-            if not w.base:
-                first = (
-                    latest_per_key(source, keys, order_by) if order_by else source
-                )
-                self._write_df(first, w.data)
-                return
-            log.warning(
-                "upsert on unpartitioned table %s rewrites the full table per "
-                "batch; write with partition_by and use upsert_pruned for the "
-                "O(affected-partitions) steady state",
-                self.root,
-            )
-            merged = merge_dataframes(
-                self._read_resolved(w.prev), source, keys, order_by=order_by,
-                event_time_wins=event_time_wins,
-            )
-            self._write_df(merged, w.data)
-            if w.mor:  # the rewrite resolved any pending deltas
-                w.mor = {**w.mor, "pending": 0}
+            w.partition_by = list(partition_by or w.partition_by)
+            self._merge(w, source, keys, order_by, event_time_wins)
 
     def _partition_columns(self) -> list[str]:
         """Partition columns of the current version, from its log entry
@@ -570,74 +562,74 @@ class ParquetTable:
             pred = pred | match
         return tgt.filter(pred)  # partition-pruned scan
 
-    def upsert_pruned(
+    def _merge(
         self,
+        w: _Write,
         source: DataFrame,
         keys: list[str],
-        partition_by: list[str],
-        order_by: list[str] | None = None,
-        event_time_wins: bool = False,
-        txn: tuple[str, int] | None = None,
+        order_by: list[str] | None,
+        event_time_wins: bool,
     ) -> None:
-        """Partition-pruned MERGE: rewrite ONLY the partitions the source
-        batch touches; untouched partitions are hardlinked into the new
-        version (a metadata op). This is the 100 TB CDC steady state —
-        per-batch cost is proportional to the affected partitions, not the
-        table (the same contract as a Delta MERGE with a partition-pruning
-        ON-clause predicate).
+        """Copy-on-write MERGE core of every keyed upsert: ``source``,
+        resolved to its latest row per key, merged into the snapshot of
+        ``w`` under ``w.partition_by``.
 
-        Correctness precondition (same as Delta's pruned merge): the
-        partition attributes are immutable per key (e.g. a booking's
-        booking_year/month never changes across updates). A key whose
-        partition value changed would leave its old row in the untouched
-        partition.
-        """
+        Pending merge-on-read deltas fold into the source first: the delta
+        stack ∪ the source tagged with the next sequence number (so it
+        outranks every on-disk delta) resolves to one row per key. The
+        delta-free base is then restricted to the partitions that source
+        touches and merged with it; :meth:`_rewrite_partitions` writes the
+        result and hardlinks every untouched partition forward. An
+        unpartitioned table has no restriction and is written whole."""
         from ..operators.merge import latest_per_key, merge_dataframes
 
+        parts = w.partition_by
         src = latest_per_key(source, keys, order_by)
-        with self._new_version("upsert_pruned", txn) as w:
-            w.partition_by = list(partition_by)
-            if not w.base:
-                self._write_df(src, w.data, partition_by)
-                return
-            mor = w.mor or {}
-            if mor:
-                w.mor = {**mor, "pending": 0}
-            tgt = self._read_resolved(w.prev)
-            if mor.get("pending"):
-                # pending merge-on-read deltas: the untouched-partition link
-                # pass would carry delta files forward AND resolution would
-                # let stale delta rows outrank this merge's output — fold
-                # everything (the resolved read) into a clean full rewrite
-                # instead. Rare: upsert_delta folds on its own cadence;
-                # this is the direct-caller safety path.
-                merged = merge_dataframes(
-                    tgt, src, keys, order_by=order_by,
-                    event_time_wins=event_time_wins,
+        if not w.base:
+            self._write_df(src, w.data, parts)
+            return
+        # partition combos from the PRE-dedupe frames: the same distinct
+        # set (partition attrs are immutable per key) without the dedupe
+        # or resolve shuffle in the peek job's lineage
+        combos = source.select(*parts)
+        mor = w.mor or {}
+        if mor.get("pending"):
+            if not _same_rule(mor, keys, event_time_wins):
+                raise ConcurrentWriteError(
+                    f"table {self.root}: a merge-on-read delta under another "
+                    "merge rule landed after the fold; retry"
                 )
-                self._write_df(
-                    merged.repartition(*partition_by), w.data, partition_by
-                )
-                return
-            # partition combos from the PRE-dedupe source: identical distinct
-            # set (partition attrs are immutable per key — the pruned-merge
-            # precondition) without latest_per_key's window shuffle in the
-            # peek job's lineage.
-            affected_tgt = self._restrict_to_partitions_of(
-                tgt, source.select(*partition_by).distinct(), partition_by
+            stack = self._delta_stack(w.base_dir)
+            tagged = src.withColumn("__seq", F.lit(int(mor.get("seq", 0)) + 1))
+            spec = {**mor, "order_by": list(order_by or [])}
+            src = _mor_resolve_tagged(
+                stack.unionByName(tagged, allowMissingColumns=True), spec
+            ).select(*src.columns)
+            combos = combos.unionByName(stack.select(*parts))
+            w.mor = {**mor, "pending": 0}
+        base = self.spark.read.parquet(w.base_dir)  # _delta is hidden
+        if parts:
+            base = self._restrict_to_partitions_of(
+                base, combos.distinct(), parts
             )
-            merged = merge_dataframes(
-                affected_tgt, src, keys, order_by=order_by,
-                event_time_wins=event_time_wins,
+        else:
+            log.warning(
+                "upsert on unpartitioned table %s rewrites the full table per "
+                "batch; upsert with partition_by for the "
+                "O(affected-partitions) steady state",
+                self.root,
             )
-            # repartition on the partition columns: each combo lands in ONE
-            # task → one file per partition instead of (shuffle.partitions ×
-            # combos) slivers; steady-state read/merge cost tracks partition
-            # count, not trigger count. (Huge single partitions at real
-            # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
-            self._rewrite_partitions(
-                merged.repartition(*partition_by), partition_by, w
-            )
+        merged = merge_dataframes(
+            base, src, keys, order_by=order_by, event_time_wins=event_time_wins
+        )
+        # repartition on the partition columns: each combo lands in ONE
+        # task → one file per partition instead of (shuffle.partitions ×
+        # combos) slivers; steady-state read/merge cost tracks partition
+        # count, not trigger count. (Huge single partitions at real
+        # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
+        self._rewrite_partitions(
+            merged.repartition(*parts) if parts else merged, parts, w
+        )
 
     def upsert_delta(
         self,
@@ -651,7 +643,7 @@ class ParquetTable:
     ) -> None:
         """Merge-on-read upsert — the low-latency CDC steady state.
 
-        A copy-on-write merge (:meth:`upsert_pruned`) pays O(affected
+        A copy-on-write merge (:meth:`upsert`) pays O(affected
         partitions) per trigger; when micro-batches are small and spread
         across partitions that floor dominates (measured ~1 s/batch at
         1 k-event triggers). This is the Hudi-MoR / Delta-deletion-vector
@@ -661,14 +653,14 @@ class ParquetTable:
         table size. Readers resolve base ∪ deltas to one row per key (one
         `max_by` hash-agg — see `_mor_resolve_tagged`); every
         ``fold_after``-th batch folds the pending deltas into the base
-        with the standard pruned merge, bounding both the read tax and the
+        with the copy-on-write merge, bounding both the read tax and the
         file count.
 
         Same conflict semantics as the merge it defers (arrival-wins by
         delta sequence; ``event_time_wins`` resolves by max event time
         with source-wins ties), same txn idempotency markers, same
         optimistic-concurrency commit."""
-        from ..operators.merge import latest_per_key, merge_dataframes
+        from ..operators.merge import latest_per_key
 
         src = latest_per_key(source, keys, order_by)
         spec = {
@@ -683,44 +675,21 @@ class ParquetTable:
                 w.mor = {**spec, "seq": 0, "pending": 0}
                 return
             mor = w.mor or {**spec, "seq": 0, "pending": 0}
-            if (
-                mor["keys"] != spec["keys"]
-                or bool(mor.get("event_time_wins")) != spec["event_time_wins"]
-            ):
+            if not _same_rule(mor, keys, event_time_wins):
                 raise ValueError(
-                    "upsert_delta merge spec differs from the table's pending "
-                    f"spec {mor} — fold first (upsert_pruned) before changing it"
+                    "upsert_delta merge spec differs from the table's "
+                    f"merge-on-read spec {mor}: upsert folds pending deltas "
+                    "under that spec, compact() resets it"
                 )
             seq = int(mor.get("seq", 0)) + 1
             pending = int(mor.get("pending", 0)) + 1
             spec = {**mor, "keys": spec["keys"], "order_by": spec["order_by"]}
 
             if pending >= fold_after:
-                # fold trigger: resolve pending deltas + this batch into one
-                # merged source, then a standard pruned merge against the
-                # delta-free base. Cost amortizes to merge/fold_after per
-                # trigger. The incoming batch outranks every on-disk delta
-                # (seq is strictly increasing). With fold_after=1 no delta
-                # is ever pending, so the stack may be None.
-                stack = self._delta_stack(w.base_dir)
-                tagged = src.withColumn("__seq", F.lit(seq))
-                allf = (
-                    tagged if stack is None
-                    else stack.unionByName(tagged, allowMissingColumns=True)
-                )
-                resolved_src = _mor_resolve_tagged(allf, spec).select(*src.columns)
-                base = self.spark.read.parquet(w.base_dir)  # _delta is hidden
-                affected = self._restrict_to_partitions_of(
-                    base, resolved_src.select(*partition_by).distinct(),
-                    partition_by,
-                )
-                merged = merge_dataframes(
-                    affected, resolved_src, keys, order_by=order_by,
-                    event_time_wins=event_time_wins,
-                )
-                self._rewrite_partitions(
-                    merged.repartition(*partition_by), partition_by, w
-                )
+                # fold trigger: the copy-on-write merge of this batch, which
+                # folds the pending deltas in with it. Cost amortizes to
+                # merge/fold_after per trigger.
+                self._merge(w, source, keys, order_by, event_time_wins)
                 w.mor = {**spec, "seq": seq, "pending": 0}
                 return
 

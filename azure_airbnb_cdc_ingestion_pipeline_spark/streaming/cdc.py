@@ -16,9 +16,12 @@ Reference behavior being reproduced
   merge is latest-timestamp-wins per booking_id (§2.7).
 
 Scale: each micro-batch shuffles only its own (small) data for the
-dedupe; the left-anti pass over the big fact table broadcasts the batch's
-keys, so the steady-state cost is one target scan per trigger — the same
-asymptotics as Delta MERGE without file pruning.
+dedupe, and the fact sink appends it as a merge-on-read delta — O(batch)
+per trigger, no target scan. Every few batches the pending deltas fold
+into the base with a copy-on-write merge restricted to the partitions
+they touch (the left-anti pass broadcasts the folded keys; untouched
+partitions are hardlinked forward), so a fold costs O(affected
+partitions), not O(table).
 """
 
 from __future__ import annotations

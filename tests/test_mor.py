@@ -27,6 +27,8 @@ from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import (
     read_version,
 )
 
+from test_tables_scale import _inodes
+
 
 @pytest.fixture()
 def table(spark, tmp_path):  # noqa: F811
@@ -42,8 +44,9 @@ def _state(t):
 
 
 def test_mor_matches_cow_merge(spark, tmp_path):  # noqa: F811
-    """Same batch sequence through upsert_delta and upsert_pruned must
-    yield identical resolved content at every step."""
+    """Same batch sequence through upsert_delta and the copy-on-write
+    upsert(partition_by=...) must yield identical resolved content at
+    every step."""
     mor = ParquetTable(spark, str(tmp_path / "mor"))
     cow = ParquetTable(spark, str(tmp_path / "cow"))
     batches = [
@@ -52,11 +55,15 @@ def test_mor_matches_cow_merge(spark, tmp_path):  # noqa: F811
         [(2, 9, "b2", 1), (2, 8, "b-dup", 1)],  # intra-batch dedupe
         [(4, 1, "d", 2)],
     ]
+    # unpartitioned, folding every 2nd batch: the fold writes the table whole
+    flat = ParquetTable(spark, str(tmp_path / "flat"))
     for rows in batches:
         df = _mk(spark, rows)
         mor.upsert_delta(df, keys=["k"], partition_by=["p"], order_by=["ts"])
-        cow.upsert_pruned(df, keys=["k"], partition_by=["p"], order_by=["ts"])
-        assert _state(mor) == _state(cow)
+        cow.upsert(df, keys=["k"], partition_by=["p"], order_by=["ts"])
+        flat.upsert_delta(df, keys=["k"], partition_by=[], order_by=["ts"],
+                          fold_after=2)
+        assert _state(mor) == _state(cow) == _state(flat)
 
 
 def test_mor_event_time_wins_and_tie(spark, table):  # noqa: F811
@@ -126,11 +133,28 @@ def test_mor_direct_upsert_pruned_on_pending_folds(spark, table):  # noqa: F811
                        keys=["k"], partition_by=["p"], order_by=["ts"])
     table.upsert_delta(_mk(spark, [(3, 1, "c", 2)]),
                        keys=["k"], partition_by=["p"], order_by=["ts"])
-    table.upsert_pruned(_mk(spark, [(1, 9, "a2", 0)]),
-                        keys=["k"], partition_by=["p"], order_by=["ts"])
+    before = _inodes(table._version_dir(table.current_version()))
+    table.upsert(_mk(spark, [(1, 9, "a2", 0)]),
+                 keys=["k"], partition_by=["p"], order_by=["ts"])
     assert _state(table) == [(1, "a2"), (2, "b"), (3, "c")]
     vdir = table._version_dir(table.current_version())
     assert not glob.glob(os.path.join(vdir, "_delta", "*"))
+    # the fold is pruned too: p=1 (no source row, no delta) is hardlinked
+    # forward, not rewritten
+    after = _inodes(vdir)
+    untouched = {rel: ino for rel, ino in before.items() if rel.startswith("p=1/")}
+    assert untouched and all(after.get(rel) == ino for rel, ino in untouched.items())
+    assert not any(rel.startswith("_delta") for rel in after)
+    # an upsert under another merge rule compares against the table as it
+    # reads: k=2 reads the late arrival (ts 0), which an event-time source
+    # at ts 0 replaces (source wins the tie); the older base row (ts 1)
+    # must not come back
+    table.upsert_delta(_mk(spark, [(2, 0, "b-late", 1)]),
+                       keys=["k"], partition_by=["p"], order_by=["ts"])
+    assert _state(table) == [(1, "a2"), (2, "b-late"), (3, "c")]
+    table.upsert(_mk(spark, [(2, 0, "b-src", 1)]), keys=["k"],
+                 order_by=["ts"], event_time_wins=True)
+    assert _state(table) == [(1, "a2"), (2, "b-src"), (3, "c")]
     # read() of the folded version needs no resolution pass
     entry = table._entry(table.current_version())
     assert not (entry.get("mor") or {}).get("pending")

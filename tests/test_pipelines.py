@@ -762,9 +762,13 @@ def test_scd2_gate_quarantine_versions_clean_rows(spark, tmp_path):
 
 
 def test_scd2_quarantine_wiring_validated_upfront(spark, tmp_path):
+    from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_booking_fact import (
+        booking_expectations, process_booking_batch,
+    )
     from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_dim_scd2 import (
         load_dim_scd2_stream, process_scd2_batch,
     )
+    from azure_airbnb_cdc_ingestion_pipeline_spark.schemas import BOOKING_DOC_SCHEMA
 
     batch = _scd2_wave(spark, [(1, "SEG_X", "2024-02-01")])
     dim = ParquetTable(spark, str(tmp_path / "wh/dim"))
@@ -780,6 +784,26 @@ def test_scd2_quarantine_wiring_validated_upfront(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "ckpt"),
             dq_rules=_scd2_rules(), dq_on_breach="quarantine",
         )
+    assert not dim.exists()
+
+    # the fact entries share the check: nothing may commit, not even the
+    # reject-channel quarantine the batch would otherwise feed
+    landing = str(tmp_path / "feed")
+    _write_events(landing, gen_booking_events(n=20, n_keys=20, seed=3))
+    fact = ParquetTable(spark, str(tmp_path / "wh/fact"))
+    quar = ParquetTable(spark, str(tmp_path / "wh/rej"))
+    with pytest.raises(ValueError, match="dq_quarantine"):
+        process_booking_batch(
+            spark.read.schema(BOOKING_DOC_SCHEMA).json(landing), fact, quar,
+            dq_rules=booking_expectations(), dq_on_breach="quarantine",
+        )
+    with pytest.raises(ValueError, match="dq_quarantine"):
+        load_booking_fact_stream(
+            spark, landing, fact, quar, str(tmp_path / "fact_ckpt"),
+            dq_rules=booking_expectations(), dq_on_breach="quarantine",
+        )
+    assert not fact.exists() and not quar.exists()
+    assert not os.path.exists(str(tmp_path / "fact_ckpt"))
 
 
 def test_scd2_unseeded_dim_fails_loud(spark, tmp_path):

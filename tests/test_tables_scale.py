@@ -43,7 +43,7 @@ def test_upsert_pruned_rewrites_only_touched_partitions(spark, tmp_path):
         F.lit(1).alias("ver"),
         F.col("id").cast("timestamp").alias("ts"),
     )
-    t.upsert_pruned(base, keys=["k"], partition_by=["month"], order_by=["ts"])
+    t.upsert(base, keys=["k"], partition_by=["month"], order_by=["ts"])
     v1_dir = t._version_dir(t.current_version())
     v1 = _inodes(v1_dir)
 
@@ -54,7 +54,7 @@ def test_upsert_pruned_rewrites_only_touched_partitions(spark, tmp_path):
         F.lit(2).alias("ver"),
         (F.col("id") + 5000).cast("timestamp").alias("ts"),
     )
-    t.upsert_pruned(batch, keys=["k"], partition_by=["month"], order_by=["ts"])
+    t.upsert(batch, keys=["k"], partition_by=["month"], order_by=["ts"])
     out = t.read()
     assert out.count() == 1000  # 20 updates, 0 net inserts
     assert out.filter("ver = 2").count() == 20
@@ -88,13 +88,24 @@ def test_upsert_pruned_matches_full_upsert(spark, tmp_path):
     full.upsert(batch, keys=["k"], order_by=["ts"])
 
     pruned = ParquetTable(spark, str(tmp_path / "pruned"))
-    pruned.upsert_pruned(rows, keys=["k"], partition_by=["p"], order_by=["ts"])
-    pruned.upsert_pruned(batch, keys=["k"], partition_by=["p"], order_by=["ts"])
+    pruned.upsert(rows, keys=["k"], partition_by=["p"], order_by=["ts"])
+    pruned.upsert(batch, keys=["k"], partition_by=["p"], order_by=["ts"])
 
     cols = ["k", "p", "payload"]
     got = sorted(tuple(r) for r in pruned.read().select(*cols).collect())
     want = sorted(tuple(r) for r in full.read().select(*cols).collect())
     assert got == want
+
+    # a duplicated source key resolves to one row per key on the FIRST
+    # write into an empty unpartitioned table too, and stays resolved
+    dup = ParquetTable(spark, str(tmp_path / "dup"))
+    dup.upsert(
+        spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k int, v string"),
+        ["k"],
+    )
+    assert sorted(r.k for r in dup.read().collect()) == [1, 2]
+    dup.upsert(spark.createDataFrame([(3, "d")], "k int, v string"), ["k"])
+    assert sorted(r.k for r in dup.read().collect()) == [1, 2, 3]
 
 
 def test_compact_reduces_file_count(spark, tmp_path):
@@ -121,13 +132,13 @@ def test_upsert_pruned_null_partition_values_no_duplicates(spark, tmp_path):
         [(1, 2024, "a"), (2, 2024, "b"), (3, None, "c"), (4, None, "d")],
         "k int, year int, payload string",
     )
-    t.upsert_pruned(base, keys=["k"], partition_by=["year"])
+    t.upsert(base, keys=["k"], partition_by=["year"])
 
     # update one null-partition key and insert another null-partition key
     batch = spark.createDataFrame(
         [(3, None, "c2"), (5, None, "e")], "k int, year int, payload string"
     )
-    t.upsert_pruned(batch, keys=["k"], partition_by=["year"])
+    t.upsert(batch, keys=["k"], partition_by=["year"])
     out = t.read()
     assert out.count() == 5  # no duplicated k=3/k=4
     assert out.filter("k = 3").select("payload").first()[0] == "c2"
@@ -143,9 +154,9 @@ def test_upsert_pruned_escaped_partition_values(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a:b", "x"), (2, "plain", "y")], "k int, part string, payload string"
     )
-    t.upsert_pruned(base, keys=["k"], partition_by=["part"])
+    t.upsert(base, keys=["k"], partition_by=["part"])
     batch = spark.createDataFrame([(1, "a:b", "x2")], "k int, part string, payload string")
-    t.upsert_pruned(batch, keys=["k"], partition_by=["part"])
+    t.upsert(batch, keys=["k"], partition_by=["part"])
     out = t.read()
     assert out.count() == 2
     assert out.filter("k = 1").select("payload").first()[0] == "x2"
@@ -425,7 +436,7 @@ def test_upsert_pruned_semi_join_fallback_many_partitions(spark, tmp_path):
         F.lit(1).alias("ver"),
         F.col("id").cast("timestamp").alias("ts"),
     )
-    t.upsert_pruned(base, keys=["k"], partition_by=["pm"], order_by=["ts"])
+    t.upsert(base, keys=["k"], partition_by=["pm"], order_by=["ts"])
     v1 = _inodes(t._version_dir(t.current_version()))
 
     # batch touches partitions 0..499 (500 combos > the 100-combo limit)
@@ -436,7 +447,7 @@ def test_upsert_pruned_semi_join_fallback_many_partitions(spark, tmp_path):
         (F.col("id") + 10_000).cast("timestamp").alias("ts"),
     )
     assert batch.select("pm").distinct().count() == 500 > t._PRUNE_COMBO_LIMIT
-    t.upsert_pruned(batch, keys=["k"], partition_by=["pm"], order_by=["ts"])
+    t.upsert(batch, keys=["k"], partition_by=["pm"], order_by=["ts"])
     out = t.read()
     assert out.count() == 1200
     assert out.filter("ver = 2").count() == 500
@@ -735,7 +746,7 @@ def test_file_count_bounded_over_200_microbatches(spark, tmp_path):
             ((F.col("id") + (i % 20)) % 4).cast("int").alias("pm"),
             F.lit(float(i)).alias("v"),
         )
-        m.upsert_pruned(batch, keys=["k"], partition_by=["pm"])
+        m.upsert(batch, keys=["k"], partition_by=["pm"])
         counts.append(m.live_file_count())
     assert max(counts) <= max(counts[:5]) + 8, (
         f"pruned-merge file count drifted upward: {counts}"
